@@ -10,7 +10,7 @@ Reference behavior (decorator/index.js:163-197):
 Spark-first design:
  - J1 -> broadcast LEFT OUTER equi join; deterministic-match discipline via
    a stable-ordered row_number on the build side (lodash.find returns the
-   first match; see first_match_dim).
+   first match; see eni_joiner).
  - J2 (per-row HTTP geo lookup) -> a *data* join against a CIDR-range geo
    dimension: prefix-bucketed equi join + range filter, broadcast. At 100 TB
    the naive (ip BETWEEN start AND end) range join is O(n*m); bucketing by /16
@@ -20,8 +20,12 @@ Spark-first design:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .schema import ENI_DIM_SCHEMA
 
 # RFC1918 predicate — replicates decorator/index.js:149-153 EXACTLY, including
 # its quirk of classifying loopback 127/8 as "private" (SURVEY §2.2 P8).
@@ -49,8 +53,13 @@ def ip_to_int(col: Column | str) -> Column:
     out-of-range or overflowing octet now yields NULL and falls into the
     geo-miss path."""
     c = F.col(col) if isinstance(col, str) else col
-    o = F.split(c, r"\.")
-    octs = [o.getItem(i).try_cast("long") for i in range(4)]
+    return octets_to_int(F.split(c, r"\."))
+
+
+def octets_to_int(octets: Column) -> Column:
+    """:func:`ip_to_int` over an already-split octet array (NULL when any of
+    the 4 octets is missing, overflows or lies outside 0..255)."""
+    octs = [octets.getItem(i).try_cast("long") for i in range(4)]
     valid = None
     for oc in octs:
         ok = oc.isNotNull() & (oc >= 0) & (oc <= 255)
@@ -62,38 +71,26 @@ def ip_to_int(col: Column | str) -> Column:
     )
 
 
-def first_match_dim(eni_dim: DataFrame, key: str = "interfaceId") -> DataFrame:
-    """lodash.find takes the FIRST match (decorator/index.js:167). 'First' in
-    API-listing order is unknowable once distributed, so the enforced
-    discipline is *deterministic*-match: one row per key chosen by a stable
-    value ordering (bare dropDuplicates keeps whichever row the hash
-    aggregate meets first — flip-flopping sg-ids/direction across runs)."""
+def eni_joiner() -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """Build the :func:`join_eni` expressions once; the returned function
+    joins any parsed DataFrame against any ENI dimension (ENI_DIM_SCHEMA
+    columns), e.g. a stream's per-batch refreshed one."""
     from pyspark.sql import Window as W
 
-    others = [c for c in eni_dim.columns if c != key]
-    w = W.partitionBy(key).orderBy(*[F.asc_nulls_last(c) for c in others])
-    return (
-        eni_dim.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def join_eni(parsed: DataFrame, eni_dim: DataFrame) -> DataFrame:
-    """J1: broadcast left-outer equi join replacing the O(rows*enis)
-    nested-loop lookup (decorator/index.js:167-173).
-
-    Adds `security-group-ids` (NULL on miss) and `direction`
-    (inbound/outbound; NULL on miss — the reference only sets direction
-    inside the match branch, :169-173).
-    """
-    dim = first_match_dim(eni_dim)
-    joined = parsed.join(
-        F.broadcast(dim),
-        parsed["interface-id"] == dim["interfaceId"],
-        "left",
-    )
-    matched = dim["interfaceId"].isNotNull()
+    # lodash.find takes the FIRST match (decorator/index.js:167). 'First' in
+    # API-listing order is unknowable once distributed, so the enforced
+    # discipline is *deterministic*-match: one row per interfaceId chosen by
+    # a stable value ordering (bare dropDuplicates keeps whichever row the
+    # hash aggregate meets first — flip-flopping sg-ids/direction across
+    # runs).
+    others = [c for c in ENI_DIM_SCHEMA.fieldNames() if c != "interfaceId"]
+    w = W.partitionBy("interfaceId").orderBy(*[F.asc_nulls_last(c) for c in others])
+    ranked = [F.col("*"), F.row_number().over(w).alias("__rn")]
+    first = F.col("__rn") == 1
+    # name-based, so the expressions outlive any one dimension DataFrame;
+    # safe because the parsed and ENI column names are disjoint
+    cond = F.col("interface-id") == F.col("interfaceId")
+    matched = F.col("interfaceId").isNotNull()
     # ipAddress is an array (the jmespath [?Primary] filter yields a singleton
     # list, decorator/index.js:89); JS `==` coerces ['x'] == 'x' true, so the
     # comparison is against the first element (SURVEY §7.4.2). try_element_at,
@@ -105,16 +102,32 @@ def join_eni(parsed: DataFrame, eni_dim: DataFrame) -> DataFrame:
     direction = F.when(
         matched,
         F.when(
-            F.col("destaddr") == F.try_element_at(dim["ipAddress"], F.lit(1)),
+            F.col("destaddr") == F.try_element_at(F.col("ipAddress"), F.lit(1)),
             F.lit("inbound"),
         ).otherwise(F.lit("outbound")),
     )
-    return (
-        joined
-        .withColumn("security-group-ids", dim["securityGroupIds"])
-        .withColumn("direction", direction)
-        .drop("interfaceId", "securityGroupIds", "ipAddress")
-    )
+    added = {"security-group-ids": F.col("securityGroupIds"), "direction": direction}
+
+    def join(parsed: DataFrame, eni_dim: DataFrame) -> DataFrame:
+        dim = eni_dim.select(*ranked).filter(first)
+        return (
+            parsed.join(F.broadcast(dim), cond, "left")
+            .withColumns(added)
+            .drop("interfaceId", "securityGroupIds", "ipAddress", "__rn")
+        )
+
+    return join
+
+
+def join_eni(parsed: DataFrame, eni_dim: DataFrame) -> DataFrame:
+    """J1: broadcast left-outer equi join replacing the O(rows*enis)
+    nested-loop lookup (decorator/index.js:167-173).
+
+    Adds `security-group-ids` (NULL on miss) and `direction`
+    (inbound/outbound; NULL on miss — the reference only sets direction
+    inside the match branch, :169-173).
+    """
+    return eni_joiner()(parsed, eni_dim)
 
 
 def flatten_geo_dim(geo_dim: DataFrame) -> DataFrame:
@@ -190,7 +203,7 @@ def flatten_geo_dim(geo_dim: DataFrame) -> DataFrame:
     # tie-break THROUGH the attribute columns: a dirty feed carrying the
     # same [start, end] twice with conflicting attributes would otherwise
     # pick an arbitrary winner per shuffle (the flip-flop hazard
-    # first_match_dim eliminates for the ENI dim; code-review r6)
+    # eni_joiner's first-match eliminates for the ENI dim; code-review r6)
     most_specific = W.partitionBy("f_start").orderBy(
         F.asc(F.col("end_ip_int") - F.col("start_ip_int")),
         F.asc("start_ip_int"),
@@ -222,6 +235,77 @@ def bucket_geo_dim(geo_dim: DataFrame, prefix_bits: int = 16) -> DataFrame:
     )
 
 
+# geo dimension attribute -> the enriched column it fills
+_GEO_ATTRS = {
+    "country_code": "source-country-code",
+    "country_name": "source-country-name",
+    "region_code": "source-region-code",
+    "region_name": "source-region-name",
+    "city": "source-city",
+}
+
+
+def geo_joiner(geo_dim: DataFrame, src_col: str = "srcaddr",
+               geolocation_enabled: bool = True, prefix_bits: int = 16,
+               dim_is_disjoint: bool = False) -> Callable[[DataFrame], DataFrame]:
+    """Build the :func:`join_geo` expressions and the bucketed dimension
+    once; the returned function enriches any DataFrame with ``src_col``
+    (e.g. each micro-batch of a stream over a static geo dimension)."""
+    if not geolocation_enabled:
+        defaults = {out: F.lit("") for out in _GEO_ATTRS.values()}
+        defaults["source-location"] = F.struct(
+            F.lit(0.0).alias("lat"), F.lit(0.0).alias("lon")
+        )
+        return lambda df: df.withColumns(defaults)
+
+    src = F.col(src_col)
+    gate = (~is_rfc1918(src)) & src.isNotNull()
+    # de-overlap the dimension ONCE (dim-sized work) so each fact row can
+    # match at most one range — no post-join dedup shuffle on the fact side.
+    # Callers that pre-flatten (e.g. streaming, where the static dim would
+    # otherwise be re-swept every micro-batch) pass dim_is_disjoint=True.
+    prepared = geo_dim if dim_is_disjoint else flatten_geo_dim(geo_dim)
+    bucketed = bucket_geo_dim(prepared, prefix_bits)
+    dim = F.broadcast(bucketed)
+    # Split the source address ONCE per record: as a flat projection every
+    # getItem of ip_to_int re-runs its own split (4 octets, each read by the
+    # range check and the arithmetic). The one-element explode(array(...))
+    # is the same row-preserving projection barrier parse_records uses, so
+    # the octet array is materialized once and read as a plain column.
+    # Gated rows (RFC1918 / NULL source) carry a NULL array, hence a NULL
+    # __ip_int that matches no range.
+    split_once = F.explode(
+        F.array(F.when(gate, F.split(src, r"\.")))
+    ).alias("__src_octets")
+    ip_int = octets_to_int(F.col("__src_octets")).alias("__ip_int")
+    key = F.col("__ip_int")
+    # name-based (safe: the fact and dimension column names are disjoint),
+    # so the condition outlives any one fact DataFrame
+    cond = (
+        ((key / F.lit(2 ** (32 - prefix_bits))).cast("long") == F.col("ip_bucket"))
+        & (key >= F.col("start_ip_int"))
+        & (key <= F.col("end_ip_int"))
+    )
+    geo_cols = {out: F.coalesce(F.col(attr), F.lit(""))
+                for attr, out in _GEO_ATTRS.items()}
+    geo_cols["source-location"] = F.struct(
+        F.coalesce(F.col("latitude"), F.lit(0.0)).alias("lat"),
+        F.coalesce(F.col("longitude"), F.lit(0.0)).alias("lon"),
+    )
+    helpers = ["ip_bucket", "start_ip_int", "end_ip_int", *_GEO_ATTRS,
+               "latitude", "longitude", "__src_octets", "__ip_int"]
+
+    def join(df: DataFrame) -> DataFrame:
+        keyed = df.select("*", split_once).select("*", ip_int)
+        return (
+            keyed.join(dim, cond, "left")
+            .withColumns(geo_cols)
+            .drop(*helpers)
+        )
+
+    return join
+
+
 def join_geo(df: DataFrame, geo_dim: DataFrame, src_col: str = "srcaddr",
              geolocation_enabled: bool = True, prefix_bits: int = 16,
              dim_is_disjoint: bool = False) -> DataFrame:
@@ -232,64 +316,14 @@ def join_geo(df: DataFrame, geo_dim: DataFrame, src_col: str = "srcaddr",
     decorator/index.js:175-177) is applied as join-input pruning: gated rows
     never enter the join. Geo columns default to ''/0 — never NULL
     (decorator/index.js:182-190), including for gated and unmatched rows.
+    The source address is split once per record behind a projection
+    barrier (see :func:`geo_joiner`).
 
     ``geolocation_enabled`` is resolved at plan-build time (SURVEY §4.3) —
     when False the join is statically pruned from the plan entirely.
     """
-    geo_defaults = {
-        "source-country-code": F.lit(""),
-        "source-country-name": F.lit(""),
-        "source-region-code": F.lit(""),
-        "source-region-name": F.lit(""),
-        "source-city": F.lit(""),
-        "source-location": F.struct(
-            F.lit(0.0).alias("lat"), F.lit(0.0).alias("lon")
-        ),
-    }
-    if not geolocation_enabled:
-        for name, default in geo_defaults.items():
-            df = df.withColumn(name, default)
-        return df
-
-    gate = (~is_rfc1918(src_col)) & F.col(src_col).isNotNull()
-    shift = F.lit(2 ** (32 - prefix_bits))
-    # de-overlap the dimension ONCE (dim-sized work) so each fact row can
-    # match at most one range — no post-join dedup shuffle on the fact side.
-    # Callers that pre-flatten (e.g. streaming, where the static dim would
-    # otherwise be re-swept every micro-batch) pass dim_is_disjoint=True.
-    prepared = geo_dim if dim_is_disjoint else flatten_geo_dim(geo_dim)
-    bucketed = bucket_geo_dim(prepared, prefix_bits)
-    ip_int = F.when(gate, ip_to_int(src_col))
-    df = df.withColumn("__ip_int", ip_int).withColumn(
-        "__ip_bucket", (F.col("__ip_int") / shift).cast("long")
-    )
-    cond = (
-        (df["__ip_bucket"] == bucketed["ip_bucket"])
-        & (df["__ip_int"] >= bucketed["start_ip_int"])
-        & (df["__ip_int"] <= bucketed["end_ip_int"])
-    )
-    joined = df.join(F.broadcast(bucketed), cond, "left")
-    out = (
-        joined
-        .withColumn("source-country-code", F.coalesce(bucketed["country_code"], F.lit("")))
-        .withColumn("source-country-name", F.coalesce(bucketed["country_name"], F.lit("")))
-        .withColumn("source-region-code", F.coalesce(bucketed["region_code"], F.lit("")))
-        .withColumn("source-region-name", F.coalesce(bucketed["region_name"], F.lit("")))
-        .withColumn("source-city", F.coalesce(bucketed["city"], F.lit("")))
-        .withColumn(
-            "source-location",
-            F.struct(
-                F.coalesce(bucketed["latitude"], F.lit(0.0)).alias("lat"),
-                F.coalesce(bucketed["longitude"], F.lit(0.0)).alias("lon"),
-            ),
-        )
-        .drop(
-            "ip_bucket", "start_ip_int", "end_ip_int", "country_code",
-            "country_name", "region_code", "region_name", "city",
-            "latitude", "longitude", "__ip_int", "__ip_bucket",
-        )
-    )
-    return out
+    return geo_joiner(geo_dim, src_col, geolocation_enabled, prefix_bits,
+                      dim_is_disjoint)(df)
 
 
 def project_eni_dim(ec2_raw: DataFrame) -> DataFrame:

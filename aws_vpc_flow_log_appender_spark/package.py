@@ -10,6 +10,8 @@ here, not two scans + union.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -19,8 +21,28 @@ from .schema import ENRICHED_COLUMNS
 def unchunked_base64(col: Column) -> Column:
     """Spark's base64() is MIME-chunked (CRLF every 76 chars); the reference's
     Buffer.toString('base64') is not — strip the line breaks so payloads are
-    byte-comparable with unchunked encoders."""
-    return F.regexp_replace(F.base64(col), "\r\n", "")
+    byte-comparable with unchunked encoders. A literal ``replace``: the
+    CRLF needs no regex engine."""
+    return F.replace(F.base64(col), F.lit("\r\n"), F.lit(""))
+
+
+def packager() -> Callable[[DataFrame], DataFrame]:
+    """Build the :func:`package_records` projection once; the returned
+    function packages any enriched DataFrame (e.g. each micro-batch)."""
+    payload_ok = unchunked_base64(
+        F.encode(
+            F.to_json(F.struct(*[F.col(f"`{c}`") for c in ENRICHED_COLUMNS])),
+            "utf-8",
+        )
+    )
+    payload_failed = F.col("__orig_b64")
+    failed = F.col("error")
+    out = [
+        F.col("recordId"),
+        F.when(failed, F.lit("ProcessingFailed")).otherwise(F.lit("Ok")).alias("result"),
+        F.when(failed, payload_failed).otherwise(payload_ok).alias("data"),
+    ]
+    return lambda enriched: enriched.select(*out)
 
 
 def package_records(enriched: DataFrame) -> DataFrame:
@@ -33,20 +55,7 @@ def package_records(enriched: DataFrame) -> DataFrame:
     re-emits the untouched record.data; decoding+re-encoding would mangle
     non-UTF-8 originals).
     """
-    payload_ok = unchunked_base64(
-        F.encode(
-            F.to_json(F.struct(*[F.col(f"`{c}`") for c in ENRICHED_COLUMNS])),
-            "utf-8",
-        )
-    )
-    payload_failed = F.col("__orig_b64")
-    return enriched.select(
-        "recordId",
-        F.when(F.col("error"), F.lit("ProcessingFailed"))
-        .otherwise(F.lit("Ok"))
-        .alias("result"),
-        F.when(F.col("error"), payload_failed).otherwise(payload_ok).alias("data"),
-    )
+    return packager()(enriched)
 
 
 def result_counts(packaged: DataFrame) -> DataFrame:

@@ -8,10 +8,15 @@ dropped, and later emitted with result ProcessingFailed).
 
 Spark-first design: one ``rlike`` validity predicate + one ``split`` +
 positional ``getItem``/``cast`` — all built-in Column expressions, fully inside
-whole-stage codegen; no UDFs, no per-row regex exec loop.
+whole-stage codegen; no UDFs, no per-row regex exec loop. The ``*_parser``
+builders construct the projection once; ``parse_records`` / ``parse_lines``
+build and apply it in one call, a stream builds it once and applies it to
+every micro-batch.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,14 +42,14 @@ def is_valid_flow_line(col: Column | str) -> Column:
     return F.col(col).rlike(FLOW_LINE_PATTERN) if isinstance(col, str) else col.rlike(FLOW_LINE_PATTERN)
 
 
-def parse_flow_fields(line: Column) -> list[Column]:
-    """Tokenize one raw line into the 14 typed columns.
+def typed_flow_fields(toks: Column) -> list[Column]:
+    """The 14 typed columns of one tokenized line.
 
-    Single ``split`` on space + positional casts (decorator/index.js:107-126
-    does one regex exec + 14 Number()/string captures). On invalid lines the
-    casts may produce NULLs — callers gate on :func:`is_valid_flow_line`.
+    ``toks`` is the line's ``split(line, " ")`` array; each field is a
+    positional ``getItem`` + cast (decorator/index.js:107-126 does one regex
+    exec + 14 Number()/string captures). On invalid lines the casts may
+    produce NULLs — callers gate on :func:`is_valid_flow_line`.
     """
-    toks = F.split(line, " ")
     cols = []
     for i, (name, dtype) in enumerate(FLOW_FIELDS):
         c = toks.getItem(i)
@@ -59,18 +64,13 @@ def parse_flow_fields(line: Column) -> list[Column]:
     return cols
 
 
-def parse_records(records: DataFrame, data_col: str = "data",
-                  base64_encoded: bool = True) -> DataFrame:
-    """Firehose records -> parsed rows with error routing.
+def records_parser(data_col: str = "data", base64_encoded: bool = True
+                   ) -> Callable[[DataFrame], DataFrame]:
+    """Build the :func:`parse_records` projection once; the returned function
+    applies it to any records DataFrame.
 
-    Input: any DataFrame with a ``recordId`` column and a payload column.
-    Output columns: ``recordId``, ``raw`` (decoded line), ``error`` (bool),
-    ``@timestamp`` and the 14 typed flow fields (NULL when error).
-
-    Mirrors extractRecords (decorator/index.js:100-139): valid rows become
-    typed records, invalid rows carry the raw payload with ``error=true``.
-    Implemented as one projection (no per-branch scans): the validity predicate
-    is computed once and the typed columns are NULL-masked by it.
+    Every expression is name-based, so one parser serves every micro-batch
+    of a stream without rebuilding its Column expressions per batch.
     """
     if base64_encoded:
         raw = decode_base64_utf8(data_col)
@@ -86,43 +86,82 @@ def parse_records(records: DataFrame, data_col: str = "data",
     # null-safe: a NULL payload gives rlike(NULL)=NULL, and NULL `error`
     # would be treated as false downstream, misrouting the record to 'Ok'
     valid = F.coalesce(is_valid_flow_line(raw), F.lit(False))
-    # Pin `raw` and the regex validity to ONE evaluation per record
-    # (optimization r10, guide §2.3/§7.2): as a flat projection, Catalyst
-    # pushes the downstream validity filter below this projection and
-    # re-inlines `raw` into every consumer — the synthesized/decoded line
-    # was built twice and the 14-group validity regex ran up to four times
-    # per record (once in the pushed-down scan filter, once per projected
-    # column group; profiled at sf0.1: the parse stage was 9.2 s CPU of
-    # which the duplicated regex was the bulk). A one-element
-    # explode(array(struct(raw, valid))) is row-preserving and acts as a
-    # projection barrier: predicates referencing the generator's output
-    # cannot be pushed below it, so the line is materialized once and the
-    # regex verdict is computed once and reused as a plain column.
+    # Pin `raw`, the regex validity and the token array to ONE evaluation
+    # per record (optimization r10, guide §2.3/§7.2): as a flat projection,
+    # Catalyst pushes the downstream validity filter below this projection
+    # and re-inlines `raw` into every consumer — the line was built twice,
+    # the 14-group validity regex ran up to four times per record, and each
+    # of the 14 typed fields re-ran its own split of the line. A one-element
+    # explode(array(struct(raw, valid, toks))) is row-preserving and acts
+    # as a projection barrier: predicates referencing the generator's
+    # output cannot be pushed below it, so the line is materialized once,
+    # tokenized once, and the regex verdict is computed once and reused as
+    # a plain column.
     # (`__orig_b64` stays OUTSIDE the barrier: it is only consumed by the
     # dead-letter packaging path, and leaving it a flat projection lets
     # column pruning drop its base64 re-encode for every query that never
     # reads it.)
-    df = records.select(
-        "*",
-        F.explode(
-            F.array(F.struct(raw.alias("raw"), valid.alias("valid")))
-        ).alias("__rv"),
-    )
-    rawc = F.col("__rv.raw")
+    barrier = F.explode(
+        F.array(F.struct(raw.alias("raw"), valid.alias("valid"),
+                         F.split(raw, " ").alias("toks")))
+    ).alias("__rv")
     validc = F.col("__rv.valid")
-    parsed = parse_flow_fields(rawc)
-    out = df.select(
-        "recordId",
-        rawc.alias("raw"),
+    out = [
+        F.col("recordId"),
+        F.col("__rv.raw").alias("raw"),
         orig.alias("__orig_b64"),
         (~validc).alias("error"),
         F.when(validc, F.current_timestamp()).alias("@timestamp"),
         *[
             F.when(validc, c).alias(name)
-            for c, (name, _) in zip(parsed, FLOW_FIELDS)
+            for c, (name, _) in zip(typed_flow_fields(F.col("__rv.toks")),
+                                    FLOW_FIELDS)
         ],
-    )
-    return out
+    ]
+
+    def parse(records: DataFrame) -> DataFrame:
+        return records.select("*", barrier).select(*out)
+
+    return parse
+
+
+def parse_records(records: DataFrame, data_col: str = "data",
+                  base64_encoded: bool = True) -> DataFrame:
+    """Firehose records -> parsed rows with error routing.
+
+    Input: any DataFrame with a ``recordId`` column and a payload column.
+    Output columns: ``recordId``, ``raw`` (decoded line), ``error`` (bool),
+    ``@timestamp`` and the 14 typed flow fields (NULL when error).
+
+    Mirrors extractRecords (decorator/index.js:100-139): valid rows become
+    typed records, invalid rows carry the raw payload with ``error=true``.
+    Implemented as one projection (no per-branch scans): the validity predicate
+    is computed once and the typed columns are NULL-masked by it.
+    """
+    return records_parser(data_col, base64_encoded)(records)
+
+
+def lines_parser(line_col: str = "value", unique_ids: bool = False
+                 ) -> Callable[[DataFrame], DataFrame]:
+    """Build the :func:`parse_lines` projection once; the returned function
+    applies it to any DataFrame of lines (e.g. each micro-batch)."""
+    line = F.col(line_col)
+    if unique_ids:
+        from pyspark.sql import Window as W
+
+        w = W.partitionBy(line_col).orderBy(F.monotonically_increasing_id())
+        record_id = F.concat(
+            F.sha2(line, 256), F.lit("-"), F.row_number().over(w).cast("string")
+        )
+    else:
+        record_id = F.sha2(line, 256)
+    framed = [record_id.alias("recordId"), line.alias("data")]
+    parse = records_parser("data", base64_encoded=False)
+
+    def parse_framed(lines: DataFrame) -> DataFrame:
+        return parse(lines.select(*framed))
+
+    return parse_framed
 
 
 def parse_lines(lines: DataFrame, line_col: str = "value",
@@ -138,21 +177,4 @@ def parse_lines(lines: DataFrame, line_col: str = "value",
     repeats with a per-content occurrence index (costs one shuffle on the
     line content) — use for sinks that dedupe on recordId.
     """
-    if unique_ids:
-        from pyspark.sql import Window as W
-
-        w = W.partitionBy(line_col).orderBy(F.monotonically_increasing_id())
-        df = lines.select(
-            F.concat(
-                F.sha2(F.col(line_col), 256),
-                F.lit("-"),
-                F.row_number().over(w).cast("string"),
-            ).alias("recordId"),
-            F.col(line_col).alias("data"),
-        )
-    else:
-        df = lines.select(
-            F.sha2(F.col(line_col), 256).alias("recordId"),
-            F.col(line_col).alias("data"),
-        )
-    return parse_records(df, data_col="data", base64_encoded=False)
+    return lines_parser(line_col, unique_ids)(lines)

@@ -63,6 +63,21 @@ def test_flatten_geo_dim_has_no_nested_loop(spark):
     assert "CartesianProduct" not in p
 
 
+def test_decorate_lines_splits_each_record_once(spark):
+    """The decorator tokenizes each line once and splits each source address
+    once: exactly 2 split( nodes in the executed plan. Without the
+    projection barriers each of the 14 typed fields and every octet read
+    re-runs its own split (30 nodes)."""
+    from aws_vpc_flow_log_appender_spark import fixtures
+    from aws_vpc_flow_log_appender_spark.pipeline import decorate_lines
+
+    lines = spark.createDataFrame([(ln,) for ln in fixtures.make_lines(20)], "value string")
+    out = decorate_lines(lines, fixtures.eni_dim_df(spark), fixtures.geo_dim_flat_df(spark),
+                         unique_ids=True, geo_dim_is_disjoint=True)
+    p = out._jdf.queryExecution().executedPlan().toString()
+    assert p.count("split(") == 2, p
+
+
 def test_agg_has_partial_phase(plans):
     p = plans("agg_pricing_summary")
     assert "partial_sum" in p  # map-side combine before the exchange

@@ -361,3 +361,154 @@ def test_session_window_watermark_is_ms_truncated(spark, tmp_path):
         for r in spark.read.schema(agg.schema).parquet(out).collect()
     )
     assert emitted == ["low"]  # the band session is held back
+
+
+# Lines for the stream-vs-batch parity files: every decorator branch the
+# stream must treat exactly like the batch path.
+_PARITY_EXTRA_LINES = [
+    "",  # empty line
+    "not a flow log line",
+    # out-of-range octet: regex-valid, but no integer address -> geo miss
+    "2 123456789010 eni-1854f949 1.2.3.300 172.31.16.21 1 2 6 1 40 1418530010 1418530070 ACCEPT OK",
+    # int64-overflowing byte count: a NULL field, the record still flows
+    "2 123456789010 eni-1854f949 72.21.196.65 172.31.16.21 1 2 6 1 "
+    "99999999999999999999 1418530010 1418530070 ACCEPT OK",
+    # int64-overflowing octet
+    "2 123456789010 eni-miss0001 99999999999999999999.1.1.1 10.0.0.1 1 2 6 1 40 "
+    "1418530010 1418530070 REJECT OK",
+    # 127/8 is "private" in the reference's RFC1918 regex
+    "2 123456789010 eni-2b64c38a 127.0.0.1 10.100.2.48 1 2 6 1 40 1418530010 1418530070 ACCEPT OK",
+    # inside the nested /19 (Seattle) and only inside the /8 (country level)
+    "2 123456789010 eni-1854f949 72.21.200.1 172.31.16.21 1 2 6 1 40 1418530010 1418530070 ACCEPT OK",
+    "2 123456789010 eni-miss0002 72.9.9.9 172.31.16.21 1 2 6 1 40 1418530010 1418530070 ACCEPT OK",
+]
+
+
+def _parity_geo_dim(spark):
+    """The fixture geo ranges plus a country-level /8 the Seattle range
+    nests in (the most specific range must win)."""
+    from aws_vpc_flow_log_appender_spark.schema import GEO_DIM_SCHEMA
+
+    rows = [
+        (fixtures._ip_to_int(s), fixtures._ip_to_int(e), cc, cn, rc, rn, city, lat, lon)
+        for s, e, cc, cn, rc, rn, city, lat, lon in fixtures.GEO_ROWS
+    ]
+    rows.append((fixtures._ip_to_int("72.0.0.0"), fixtures._ip_to_int("72.255.255.255"),
+                 "US", "United States", "", "", "", 37.0, -95.0))
+    return spark.createDataFrame(rows, GEO_DIM_SCHEMA)
+
+
+def _parity_files(tmp_path, n_files=3):
+    """``n_files`` line files; each repeats some lines byte for byte."""
+    lines = fixtures.make_lines(60, seed=7) + _PARITY_EXTRA_LINES
+    files = []
+    for i in range(n_files):
+        part = lines[i::n_files]
+        part = part + part[:4]  # byte-identical repeats
+        path = tmp_path / f"batch-{i}.log"
+        path.write_text("\n".join(part) + "\n")
+        files.append(path)
+    return files
+
+
+def _comparable(rows):
+    """{recordId: (result, payload)} with ``@timestamp`` removed from the
+    decoded Ok payloads (it is the processing time)."""
+    import base64
+    import json
+
+    out = {}
+    for r in rows:
+        data = r["data"]
+        if r["result"] == "Ok":
+            record = json.loads(base64.b64decode(data))
+            record.pop("@timestamp")
+            data = record
+        out[r["recordId"]] = (r["result"], data)
+    return out
+
+
+@pytest.fixture(scope="module")
+def three_batch_stream(spark, tmp_path_factory):
+    """Run stream_decorate over 3 files, one micro-batch each, counting the
+    Column constructors and ENI refreshes inside each micro-batch."""
+    import os
+
+    from aws_vpc_flow_log_appender_spark.streaming import flowlog
+
+    tmp = tmp_path_factory.mktemp("parity")
+    files = _parity_files(tmp)
+    src = tmp / "in"
+    src.mkdir()
+    counted = ("split", "when", "col", "lit")
+    calls = {name: 0 for name in counted}
+    originals = {name: getattr(F, name) for name in counted}
+
+    def counting(name):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return originals[name](*args, **kwargs)
+        return wrapper
+
+    refreshes = []
+
+    def eni_provider(s):
+        refreshes.append(dict(calls))  # constructor counts as the batch starts
+        return fixtures.eni_dim_df(s)
+
+    batch_ends = []
+    mp = pytest.MonkeyPatch()
+    for name in counted:
+        mp.setattr(F, name, counting(name))
+    try:
+        q = flowlog.stream_decorate(
+            spark, str(src), eni_provider, _parity_geo_dim(spark),
+            checkpoint_dir=str(tmp / "ckpt"), output_path=str(tmp / "out"),
+            available_now=False,
+        )
+        try:
+            for f in files:
+                os.rename(f, src / f.name)
+                q.processAllAvailable()
+                batch_ends.append(dict(calls))
+        finally:
+            q.stop()
+    finally:
+        mp.undo()
+    return {"out": str(tmp / "out"), "files": [src / f.name for f in files],
+            "calls": calls, "refreshes": refreshes, "batch_ends": batch_ends}
+
+
+def test_stream_builds_decorator_once(three_batch_stream):
+    """The decorator's expressions are built once per stream: the line and
+    the source address are split once in total, and no micro-batch builds a
+    Column — while the ENI provider still runs once per micro-batch."""
+    run = three_batch_stream
+    assert len(run["refreshes"]) == 3
+    assert run["calls"]["split"] == 2
+    for start, end in zip(run["refreshes"], run["batch_ends"]):
+        assert start == end, (start, end)
+
+
+def test_stream_matches_batch_decorate_lines(spark, three_batch_stream):
+    """Each micro-batch's output equals decorate_lines(unique_ids=True,
+    geo_dim_is_disjoint=True) over the same file: same recordIds, results
+    and payloads (``@timestamp`` aside)."""
+    from aws_vpc_flow_log_appender_spark.enrich import flatten_geo_dim
+    from aws_vpc_flow_log_appender_spark.pipeline import decorate_lines
+
+    run = three_batch_stream
+    geo_flat = flatten_geo_dim(_parity_geo_dim(spark))
+    for epoch, path in enumerate(run["files"]):
+        streamed = spark.read.parquet(f"{run['out']}/epoch={epoch}").collect()
+        batch = decorate_lines(
+            spark.read.text(str(path)), fixtures.eni_dim_df(spark), geo_flat,
+            unique_ids=True, geo_dim_is_disjoint=True,
+        ).collect()
+        n_lines = len(path.read_text().splitlines())
+        assert len(streamed) == len(batch) == n_lines
+        got, want = _comparable(streamed), _comparable(batch)
+        assert len(got) == n_lines  # repeats keep distinct recordIds
+        assert got == want
+        results = {res for res, _ in got.values()}
+        assert results == {"Ok", "ProcessingFailed"}

@@ -44,6 +44,8 @@ for path, pat in (
 print(f'doc-count gate OK: README/PARITY both state {n}')
 "
 python -m pytest tests/ -q
+# the benchmark's seeded input generators: its expected counts come from them
+python -m pytest perfbench/test_flowgen.py -q
 python tools/verify_local.py
 # COMMIT EVERY COMPLETE BENCH RUN (VERDICT r5: the best r5 run went
 # uncaptured): the artifact now carries loadavg + raw trials, and the A/B
